@@ -432,7 +432,8 @@ def _centroid_frame(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
     a ~512-literal tree per Lloyd round (measured ~1 s driver-side per
     compile, the dominant cost of the whole IVF build).  Carrying the model
     as DATA keeps the scoring expression small and byte-identical across
-    iterations and queries — compiled once, cached thereafter — while the
+    iterations and queries — compiled once, cached thereafter (in a
+    codegen cache sized by ``session.CODEGEN_CACHE_ENTRIES``) — while the
     broadcast stays map-side: no crossJoin row inflation, no per-vector
     shuffle.
 

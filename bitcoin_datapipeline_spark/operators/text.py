@@ -2493,9 +2493,8 @@ def dedup_components(
         # deeper than ~2^max_iter hops to trigger at the default budget)
         for part in settled_parts:
             _release_ckpt(part)
-        for c in prev_ckpt:
+        for c in prev_ckpt:  # starts as [edges]; rotation owns it
             _release_ckpt(c)
-        _release_ckpt(edges)
         _release_ckpt(pairs)
         raise RuntimeError(
             f"dedup_components did not converge within {max_iter} rounds; "
@@ -3547,11 +3546,16 @@ def minhash_calibration(
     out = (
         cand.join(pa, "doc_a")
         .join(pb, "doc_b")
-        .select(matches.alias("n_sig_matches"), r6(jac).alias("jaccard"))
+        .select(
+            matches.alias("n_sig_matches"),
+            # the 6-dp jaccard in whole millionths (the oracle's BIGINT
+            # cast rounds to nearest as well)
+            F.round(r6(jac) * 1_000_000).cast("long").alias("jaccard_micro"),
+        )
         .groupBy(F.col("n_sig_matches").cast("int").alias("n_sig_matches"))
         .agg(
             F.count("*").cast("long").alias("n_pairs"),
-            r6(F.avg("jaccard")).alias("avg_exact_jaccard"),
+            F.sum("jaccard_micro").alias("micro_sum"),
         )
         .select(
             "n_sig_matches",
@@ -3559,7 +3563,14 @@ def minhash_calibration(
                 "est_jaccard"
             ),
             "n_pairs",
-            "avg_exact_jaccard",
+            # mean rounded half up to 6 dp in exact integer arithmetic: a
+            # double sum depends on the order rows arrive in, and a mean
+            # that sits on a 6-dp tie (common: a sum of n 6-dp values over
+            # n) then rounds either way from run to run
+            (
+                F.expr("(2 * micro_sum + n_pairs) div (2 * n_pairs)")
+                / F.lit(1_000_000.0)
+            ).alias("avg_exact_jaccard"),
         )
     )
     out._lsh_sigs_ckpt = sigs
@@ -3610,8 +3621,9 @@ cand AS (
 ),
 pairs AS (
   SELECT ({match_sum}) AS n_sig_matches,
-         round(len(list_intersect(x.shs, y.shs)) * 1.0
-               / (x.n + y.n - len(list_intersect(x.shs, y.shs))), 6) AS jaccard
+         CAST(round(len(list_intersect(x.shs, y.shs)) * 1.0
+               / (x.n + y.n - len(list_intersect(x.shs, y.shs))), 6) * 1000000
+              AS BIGINT) AS jaccard_micro
   FROM cand c
   JOIN sigs x ON c.doc_a = x.doc_id
   JOIN sigs y ON c.doc_b = y.doc_id
@@ -3619,7 +3631,8 @@ pairs AS (
 SELECT CAST(n_sig_matches AS INTEGER) AS n_sig_matches,
        round(n_sig_matches / {float(n_sigs)!r}, 6) AS est_jaccard,
        CAST(count(*) AS BIGINT) AS n_pairs,
-       round(avg(jaccard), 6) AS avg_exact_jaccard
+       CAST((2 * sum(jaccard_micro) + count(*)) // (2 * count(*)) AS DOUBLE)
+         / 1000000 AS avg_exact_jaccard
 FROM pairs
 GROUP BY n_sig_matches"""
 

@@ -28,13 +28,33 @@ local[32]):
   dependence, exact integer `div` arithmetic everywhere.  (Spark ≤4.0's
   ``spark.sql.legacy.parquet.nanosAsLong`` was removed in 4.1; the explicit
   schema read replaces it.)
+- Codegen cache sized to the query catalogue (``CODEGEN_CACHE_ENTRIES``):
+  Spark keeps ONE cache of compiled generated classes per JVM (so on a
+  cluster, one per executor as well as the driver), 100 entries by
+  default.  The engine's queries need far more than that — about 290
+  classes for an 11-query interactive mix, about 3,200 for a round-robin
+  pass over the whole catalogue — so a default-sized cache evicts
+  everything before a query comes back and every repeat re-runs Janino.
+  The conf is STATIC (read once, when the JVM first generates code), so
+  only :func:`get_spark` can set it; :func:`configure` can only warn
+  that a session it did not build runs with a smaller cache.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+# Compiled-class cache entries per JVM: holds every class the full query
+# catalogue generates, with headroom (one round-robin pass over all 239
+# oracle-backed queries at sf0.01 compiles 3,210 classes; a second pass
+# recompiles only 111, whose code embeds values that change per run).
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 4096
 
 # Confs that are safe (and necessary) to set on a live session.
 DYNAMIC_CONF: dict[str, str] = {
@@ -68,7 +88,11 @@ def configure(spark: SparkSession) -> SparkSession:
     until the session is rebuilt.  The marker is a Python attribute on
     the session wrapper, so a DIFFERENT wrapper around the same JVM
     session (e.g. a Spark Connect proxy) re-applies harmlessly; callers
-    needing a forced re-apply can ``del spark._bdp_configured``."""
+    needing a forced re-apply can ``del spark._bdp_configured``.
+
+    A session built elsewhere (the driver's own) may run a codegen cache
+    smaller than ``CODEGEN_CACHE_ENTRIES``; the conf is static, so that is
+    logged here once per session rather than fixed."""
     if getattr(spark, "_bdp_configured", False):
         return spark
     for k, v in DYNAMIC_CONF.items():
@@ -77,6 +101,17 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             # Static conf on this build — session defaults will have to do.
             pass
+    try:
+        entries = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    except Exception:
+        entries = None  # unreadable on this build: nothing to report
+    if entries is not None and entries < CODEGEN_CACHE_ENTRIES:
+        log.warning(
+            "%s=%d is below the engine's %d: repeated queries will recompile "
+            "generated code; the conf is static, so set it when building "
+            "the session",
+            CODEGEN_CACHE_CONF, entries, CODEGEN_CACHE_ENTRIES,
+        )
     try:
         spark._bdp_configured = True
     except Exception:
@@ -109,6 +144,7 @@ def get_spark(
         # set at build time too: pyspark caches the debugging flag on the
         # FIRST wrapped API call, which can precede the first table() read
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in DYNAMIC_CONF.items():
         builder = builder.config(k, v)

@@ -17,6 +17,7 @@ conversion path.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
@@ -39,31 +40,54 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-_FORCED_SCHEMAS: dict[str, StructType] = {}
+# path -> (modification stamp, the schema the engine reads the table with)
+_SCHEMAS: dict[str, tuple[int, StructType]] = {}
+
+
+def _stamp(path: str) -> int | None:
+    """Newest modification time (ns) of a table path and, for a dataset
+    directory, of its direct entries: a table rewritten in place gets a new
+    stamp.  None when the path is not on the local file system (such a
+    table is inferred on every read)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return st.st_mtime_ns
+        with os.scandir(path) as it:
+            return max([st.st_mtime_ns] + [e.stat().st_mtime_ns for e in it])
+    except OSError:
+        return None
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table (column-pruned, pushdown-friendly parquet scan).
 
-    For ``events`` the ``ts`` column is re-typed to raw int64 epoch-µs (see
-    module docstring); the forced schema is derived from the footer ONCE per
-    path and cached — query construction calls table() repeatedly and the
-    footer re-read would otherwise run per call."""
+    Parquet schema inference runs a Spark job per read, so each table's
+    schema is inferred ONCE per path and modification stamp and cached;
+    later reads pass it explicitly and launch no job (query construction
+    calls table() repeatedly).  A miss reads the table once and keeps that
+    read, except for ``events``, whose ``ts`` column is re-typed to raw
+    int64 epoch-µs (see module docstring) and so needs a second, forced
+    read."""
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
+    stamp = _stamp(path)
+    cached = _SCHEMAS.get(path)
+    if stamp is not None and cached is not None and cached[0] == stamp:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
     if name == "events":
-        forced = _FORCED_SCHEMAS.get(path)
-        if forced is None:
-            base = spark.read.parquet(path).schema
-            forced = StructType(
-                [
-                    StructField("ts", LongType(), f.nullable) if f.name == "ts" else f
-                    for f in base.fields
-                ]
-            )
-            _FORCED_SCHEMAS[path] = forced
-        return spark.read.schema(forced).parquet(path)
-    return spark.read.parquet(path)
+        schema = StructType(
+            [
+                StructField("ts", LongType(), f.nullable) if f.name == "ts" else f
+                for f in schema.fields
+            ]
+        )
+        df = spark.read.schema(schema).parquet(path)
+    if stamp is not None:
+        _SCHEMAS[path] = (stamp, schema)
+    return df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
