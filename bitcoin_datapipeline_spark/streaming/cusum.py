@@ -36,10 +36,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from ..operators.aggregates import CUSUM_H_ABS
-from .disorder import _NO_FRONTIER, merge_fold
+from .disorder import _NO_FRONTIER, apply_fold, merge_fold
 from .vpin import _round6
 
 # price_change grid: 1e-6 (the engine-wide r6 bar convention); integer
@@ -147,6 +147,11 @@ def make_cusum_processor(
             rows, columns=[f.name for f in CUSUM_OUTPUT_SCHEMA.fields]
         )
 
+    # the schemas apply_fold reads.  The body stays off fold_processor:
+    # its one frontier field keys merge_fold on (bucket, bucket) while
+    # the pool keeps a single copy of the bucket
+    fn.state_schema = CUSUM_STATE_SCHEMA
+    fn.output_schema = CUSUM_OUTPUT_SCHEMA
     return fn
 
 
@@ -159,10 +164,6 @@ def stream_cusum(
     row per folded bar, statistics rounded exactly like the batch twin;
     batch-equivalence pinned in tests/test_properties.py across random
     micro-batch boundaries."""
-    return bars.groupBy("symbol").applyInPandasWithState(
-        make_cusum_processor(h_abs, allowed_lateness_buckets),
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        bars, make_cusum_processor(h_abs, allowed_lateness_buckets)
     )

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .disorder import _NO_FRONTIER
+
 GRID_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("symbol", T.StringType()),
@@ -74,8 +76,6 @@ GRID_STATE_SCHEMA = T.StructType(
         T.StructField("pend_n", T.ArrayType(T.LongType())),
     ]
 )
-
-_NO_FRONTIER = -(1 << 62)  # "nothing emitted yet" (epoch seconds are >= 0)
 
 
 def make_grid_resampler(gap_threshold_s: int = 60, allowed_lateness_s: int = 0):

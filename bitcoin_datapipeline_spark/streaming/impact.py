@@ -30,15 +30,20 @@ buffers bounded disorder so the fold order matches the batch sort;
 hard-late trades behind the folded frontier are dropped AND counted
 (``late_dropped`` on every emitted row).
 
-Structure note (deliberate): every processor in this module repeats the
-same ~45-line scaffold (chunk concat, state unpack/repack into parallel
-pend_* arrays, merge_fold, bucket-close loop) rather than sharing a
-fold-driver abstraction.  The shared DISCIPLINE lives in merge_fold —
-the one piece whose bugs would be correctness bugs; the scaffold is
-kept flat so each processor's state tuple, close logic, and emission
-convention are independently readable and independently property-tested
-against its batch twin, and a change to one state schema can never
-ripple through an abstraction into the other thirteen.
+Structure note (deliberate): every processor here runs on the fold
+skeleton in streaming/disorder.py (``fold_processor`` / ``apply_fold``),
+which owns the scaffold they share: chunk concat, the pending pool,
+frontier and late count around merge_fold, the state write-back, and
+the output frame.  The bar-clock processors also share its
+``walk_buckets``.  A processor declares only its input columns and
+event tuple, its body-state defaults, its fold over the sorted events,
+and its schemas, so each one's state tuple, close logic and emission
+convention stay readable in one place and are property-tested against
+its batch twin.  Each ``*_STATE_SCHEMA`` stays a literal next to its
+processor because it is that processor's checkpoint format: the
+skeleton finds the frontier, ``n_late`` and ``pend_*`` fields by name
+and never builds or reorders a schema, so a change to one processor's
+state can never ripple into another's checkpoints.
 
 cf. reference: extends the surface (the reference's aggregator computes
 live imbalance, `feature_builder.py:119-123,160-161`; impact/spread
@@ -51,14 +56,53 @@ from __future__ import annotations
 from collections import deque
 from fractions import Fraction
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.aggregates import KYLE_BUCKET_MS
-from .disorder import _NO_FRONTIER, merge_fold
+from .disorder import apply_fold, fold_processor, walk_buckets
 from .vpin import UNITS, _round6
+
+# most processors fold trades as (event_ts, trade_id, price units[, qty
+# units]) on the 1e-4 grid (UNITS — the vpin.py contract)
+_PRICE_COLS = ["event_ts", "trade_id", "price"]
+_QTY_COLS = ["event_ts", "trade_id", "price", "qty"]
+
+
+def _price_events(ev):
+    return (
+        (int(ts), int(tid), int(round(float(p) * UNITS)))
+        for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
+    )
+
+
+def _qty_events(ev):
+    return (
+        (int(ts), int(tid), int(round(float(p) * UNITS)),
+         int(round(float(q) * UNITS)))
+        for ts, tid, p, q in zip(
+            ev["event_ts"], ev["trade_id"], ev["price"], ev["qty"]
+        )
+    )
+
+
+# walk_buckets partials of the open bar, from a run of trade tuples
+def _last_price(bar, run):
+    return run[-1][2]
+
+
+def _hlc(bar, run):
+    hi = max(e[2] for e in run)
+    lo = min(e[2] for e in run)
+    if bar is not None:
+        hi, lo = max(bar[0], hi), min(bar[1], lo)
+    return hi, lo, run[-1][2]
+
+
+def _close_vol(bar, run):
+    vol = sum(e[3] for e in run)
+    return run[-1][2], vol if bar is None else bar[1] + vol
+
 
 KYLE_OUTPUT_SCHEMA = T.StructType(
     [
@@ -110,34 +154,8 @@ def _kyle_solve(n: int, sx_u: int, sy_u: int, sxy_u: int, sxx_u: int):
 def make_kyle_processor(
     bucket_ms: int = KYLE_BUCKET_MS, allowed_lateness_s: int = 0
 ):
-    late_ms = allowed_lateness_s * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price", "qty", "is_buyer_maker"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in KYLE_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr, p_q, p_mk,
-             cur_b, cur_sv, cur_open, cur_close,
-             n_closed, sx_u, sy_u, sxy_u, sxx_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr, p_q, p_mk))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b, cur_sv, cur_open, cur_close = None, 0, None, None
-            n_closed = sx_u = sy_u = sxy_u = sxx_u = 0
-
-        new = (
+    def event_tuples(ev):
+        return (
             (int(ts), int(tid), int(round(float(p) * UNITS)),
              int(round(float(q) * UNITS)), bool(mk))
             for ts, tid, p, q, mk in zip(
@@ -145,58 +163,42 @@ def make_kyle_processor(
                 ev["is_buyer_maker"],
             )
         )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
 
+    def absorb(bar, run):
+        # open bucket: (signed volume, open, close)
+        sv, p_open = (0, run[0][2]) if bar is None else bar[:2]
+        sv += sum(-q_u if maker else q_u for _, _, _, q_u, maker in run)
+        return sv, p_open, run[-1][2]
+
+    def fold(events, body):
+        (cur_b, cur_sv, cur_open, cur_close,
+         n_closed, sx_u, sy_u, sxy_u, sxx_u) = body
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, bar):
             nonlocal n_closed, sx_u, sy_u, sxy_u, sxx_u
-            dp = cur_close - cur_open  # 1e-4 units (open→close move)
+            sv, p_open, p_close = bar
+            dp = p_close - p_open  # 1e-4 units (open→close move)
             n_closed += 1
-            sx_u += cur_sv
+            sx_u += sv
             sy_u += dp
-            sxy_u += cur_sv * dp
-            sxx_u += cur_sv * cur_sv
+            sxy_u += sv * dp
+            sxx_u += sv * sv
             lam, icpt = _kyle_solve(n_closed, sx_u, sy_u, sxy_u, sxx_u)
-            rows.append(
-                (symbol, int(cur_b), int(n_closed), lam, icpt, int(n_late))
-            )
+            rows.append((b, n_closed, lam, icpt))
 
-        for ts, tid, p_u, q_u, maker in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b, cur_sv, cur_open = b, 0, p_u
-            elif b != cur_b:
-                close_bucket()
-                cur_b, cur_sv, cur_open = b, 0, p_u
-            cur_sv += -q_u if maker else q_u
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_sv),
-            int(cur_open) if cur_open is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(n_closed), int(sx_u), int(sy_u), int(sxy_u), int(sxx_u),
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in KYLE_OUTPUT_SCHEMA.fields]
+        cur_b, (cur_sv, cur_open, cur_close) = walk_buckets(
+            events, bucket_ms, cur_b, (cur_sv, cur_open, cur_close),
+            absorb, close_bucket,
         )
-        # the den=0 guard emits SQL NULL like the batch twin — pandas
-        # would silently coerce None to NaN in a float64 column, and NaN
-        # survives Arrow as NaN, not null; object dtype keeps the None
-        for c in ("kyle_lambda", "impact_intercept"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_sv, cur_open, cur_close,
+                      n_closed, sx_u, sy_u, sxy_u, sxx_u)
 
-    return fn
+    return fold_processor(
+        KYLE_STATE_SCHEMA, KYLE_OUTPUT_SCHEMA,
+        ["event_ts", "trade_id", "price", "qty", "is_buyer_maker"], event_tuples,
+        (None, 0, None, None, 0, 0, 0, 0, 0), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_kyle_lambda(
@@ -208,12 +210,8 @@ def stream_kyle_lambda(
     carrying the regression over all closed buckets so far; the row for
     the last closed bucket equals the batch `kyle_lambda` over the tape
     restricted to closed buckets (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_kyle_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=KYLE_OUTPUT_SCHEMA,
-        stateStructType=KYLE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_kyle_processor(bucket_ms, allowed_lateness_s)
     )
 
 
@@ -257,43 +255,10 @@ def _roll_solve(n: int, sx_u: int, sy_u: int, sxy_u: int):
 
 
 def make_roll_processor(allowed_lateness_s: int = 0):
-    late_ms = allowed_lateness_s * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ROLL_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             last_p, prev_dp, n_pairs, sx_u, sy_u, sxy_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            last_p, prev_dp = None, None
-            n_pairs = sx_u = sy_u = sxy_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"]
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        last_p, prev_dp, n_pairs, sx_u, sy_u, sxy_u = body
         new_pairs = False
-        for ts, tid, p_u in fold:
+        for _ts, _tid, p_u in events:
             if last_p is not None:
                 dp = p_u - last_p
                 if prev_dp is not None:
@@ -308,26 +273,13 @@ def make_roll_processor(allowed_lateness_s: int = 0):
         rows = []
         if new_pairs:
             cov, spread = _roll_solve(n_pairs, sx_u, sy_u, sxy_u)
-            rows.append((symbol, int(n_pairs), cov, spread, int(n_late)))
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(last_p) if last_p is not None else None,
-            int(prev_dp) if prev_dp is not None else None,
-            int(n_pairs), int(sx_u), int(sy_u), int(sxy_u),
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in ROLL_OUTPUT_SCHEMA.fields]
-        )
-        # cov>=0 emits NULL spread like the batch twin (see kyle note)
-        out["roll_spread"] = (
-            out["roll_spread"].astype(object)
-            .where(pd.notna(out["roll_spread"]), None)
-        )
-        yield out
+            rows.append((n_pairs, cov, spread))
+        return rows, (last_p, prev_dp, n_pairs, sx_u, sy_u, sxy_u)
 
-    return fn
+    return fold_processor(
+        ROLL_STATE_SCHEMA, ROLL_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, 0, 0, 0, 0), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_roll_spread(
@@ -337,13 +289,7 @@ def stream_roll_spread(
     folded at least one new Δp pair ("update" cadence); the latest row
     equals the batch `roll_spread` over the folded tape exactly
     (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_roll_processor(allowed_lateness_s),
-        outputStructType=ROLL_OUTPUT_SCHEMA,
-        stateStructType=ROLL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return apply_fold(trades, make_roll_processor(allowed_lateness_s))
 
 
 # --- streaming OFI (quote-side twin; operators/aggregates.order_flow_imbalance)
@@ -402,31 +348,9 @@ def make_ofi_processor(bucket_ms: int | None = None, allowed_lateness_s: int = 0
     from ..operators.aggregates import OFI_BUCKET_MS
 
     bucket_ms = OFI_BUCKET_MS if bucket_ms is None else bucket_ms
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["event_ts", "ingest_ts", "bid_px", "ask_px", "bid_sz", "ask_sz"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in OFI_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_ing, n_late, p_ts, p_ing, p_bpx, p_apx, p_qb, p_qa,
-             prev_bpx, prev_apx, prev_qb, prev_qa,
-             cur_b, cur_n, cur_u) = state.get
-            pend = list(zip(p_ts, p_ing, p_bpx, p_apx, p_qb, p_qa))
-        else:
-            f_ts = f_ing = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            prev_bpx = prev_apx = prev_qb = prev_qa = None
-            cur_b, cur_n, cur_u = None, 0, 0
-
-        new = (
+    def event_tuples(ev):
+        return (
             (int(ts), int(ing), float(bp), float(ap),
              int(round(float(qb) * SZ_UNITS)),
              int(round(float(qa) * SZ_UNITS)))
@@ -435,22 +359,19 @@ def make_ofi_processor(bucket_ms: int | None = None, allowed_lateness_s: int = 0
                 ev["ask_px"], ev["bid_sz"], ev["ask_sz"],
             )
         )
-        fold, pend, (f_ts, f_ing), late_inc = merge_fold(
-            new, pend, (f_ts, f_ing), late_ms
-        )
-        n_late += late_inc
 
+    def fold(events, body):
+        prev_bpx, prev_apx, prev_qb, prev_qa, cur_b, cur_n, cur_u = body
         rows = []
-        for ts, _ing, bpx, apx, qb_u, qa_u in fold:
+        for ts, _ing, bpx, apx, qb_u, qa_u in events:
             if prev_bpx is not None:
                 b = ts // bucket_ms
                 if cur_b is None:
                     cur_b = b
                 elif b != cur_b:
                     rows.append((
-                        symbol, int(cur_b), int(cur_n),
+                        cur_b, cur_n,
                         _round6(float(Fraction(cur_u, SZ_UNITS))),
-                        int(n_late),
                     ))
                     cur_b, cur_n, cur_u = b, 0, 0
                 e_u = (
@@ -462,23 +383,15 @@ def make_ofi_processor(bucket_ms: int | None = None, allowed_lateness_s: int = 0
                 cur_n += 1
                 cur_u += e_u
             prev_bpx, prev_apx, prev_qb, prev_qa = bpx, apx, qb_u, qa_u
+        return rows, (prev_bpx, prev_apx, prev_qb, prev_qa,
+                      cur_b, cur_n, cur_u)
 
-        state.update((
-            int(f_ts), int(f_ing), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
-            prev_bpx, prev_apx,
-            int(prev_qb) if prev_qb is not None else None,
-            int(prev_qa) if prev_qa is not None else None,
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), int(cur_u),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in OFI_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_processor(
+        OFI_STATE_SCHEMA, OFI_OUTPUT_SCHEMA,
+        ["event_ts", "ingest_ts", "bid_px", "ask_px", "bid_sz", "ask_sz"],
+        event_tuples, (None, None, None, None, None, 0, 0), fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_ofi(
@@ -489,13 +402,7 @@ def stream_ofi(
     """Live order-flow imbalance: one append-final row per closed
     (symbol, minute) bucket, equal to the batch
     `order_flow_imbalance` row for that bucket (property-tested)."""
-    return bba.groupBy("symbol").applyInPandasWithState(
-        make_ofi_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=OFI_OUTPUT_SCHEMA,
-        stateStructType=OFI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return apply_fold(bba, make_ofi_processor(bucket_ms, allowed_lateness_s))
 
 
 # --- streaming effective spread (operators/aggregates.effective_spread twin)
@@ -556,49 +463,23 @@ def make_espread_processor(allowed_lateness_s: int = 0):
     prefix — so bounded disorder reproduces the batch sequence wherever
     that prefix is unique (full-prefix ties are resolved by the quote
     tuple inside the pending pool, the batch tail key)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["kind", "event_ts", "ingest_ts", "bid_px", "ask_px",
-                "bid_sz", "ask_sz", "price"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ESPREAD_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_k2, n_late, p_ts, p_k2, p_b, p_a, p_bs, p_asz, p_px,
-             p_ets, qb, qa, cur_b, cur_n, s_eff, s_q) = state.get
-            pend = list(zip(p_ts, p_k2, p_b, p_a, p_bs, p_asz, p_px, p_ets))
-        else:
-            f_ts = f_k2 = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            qb = qa = None
-            cur_b, cur_n, s_eff, s_q = None, 0, 0.0, 0.0
+    def event_tuples(ev):
+        for k, ts, ing, b, a, bs, asz, px in zip(
+            ev["kind"], ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
+            ev["ask_px"], ev["bid_sz"], ev["ask_sz"], ev["price"],
+        ):
+            if int(k) == 0:
+                yield (int(ts) + 1, int(ing), float(b), float(a),
+                       float(bs), float(asz), -1.0, -1)
+            else:
+                yield (int(ts), _ISQ_SHIFT + int(ing), -1.0, -1.0,
+                       -1.0, -1.0, float(px), int(ts))
 
-        def tuples():
-            for k, ts, ing, b, a, bs, asz, px in zip(
-                ev["kind"], ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
-                ev["ask_px"], ev["bid_sz"], ev["ask_sz"], ev["price"],
-            ):
-                if int(k) == 0:
-                    yield (int(ts) + 1, int(ing), float(b), float(a),
-                           float(bs), float(asz), -1.0, -1)
-                else:
-                    yield (int(ts), _ISQ_SHIFT + int(ing), -1.0, -1.0,
-                           -1.0, -1.0, float(px), int(ts))
-
-        fold, pend, (f_ts, f_k2), late_inc = merge_fold(
-            tuples(), pend, (f_ts, f_k2), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        qb, qa, cur_b, cur_n, s_eff, s_q = body
         rows = []
-        for _ts, k2, b, a, _bs, _asz, px, ets in fold:
+        for _ts, k2, b, a, _bs, _asz, px, ets in events:
             if k2 < _ISQ_SHIFT:  # quote
                 qb, qa = b, a
                 continue
@@ -609,31 +490,22 @@ def make_espread_processor(allowed_lateness_s: int = 0):
                 cur_b = bkt
             elif bkt != cur_b:
                 rows.append((
-                    symbol, int(cur_b), int(cur_n),
-                    _round6(s_eff / cur_n), _round6(s_q / cur_n),
-                    int(n_late),
+                    cur_b, cur_n, _round6(s_eff / cur_n), _round6(s_q / cur_n)
                 ))
                 cur_b, cur_n, s_eff, s_q = bkt, 0, 0.0, 0.0
             mid = (qb + qa) / 2.0
             s_eff += 2.0 * abs(px - mid) / mid * 10000.0
             s_q += (qa - qb) / mid * 10000.0
             cur_n += 1
+        return rows, (qb, qa, cur_b, cur_n, s_eff, s_q)
 
-        state.update((
-            int(f_ts), int(f_k2), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
-            [t[6] for t in pend], [t[7] for t in pend],
-            qb, qa,
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), float(s_eff), float(s_q),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in ESPREAD_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_processor(
+        ESPREAD_STATE_SCHEMA, ESPREAD_OUTPUT_SCHEMA,
+        ["kind", "event_ts", "ingest_ts", "bid_px", "ask_px", "bid_sz",
+         "ask_sz", "price"],
+        event_tuples, (None, None, None, 0, 0.0, 0.0), fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_effective_spread(
@@ -644,13 +516,7 @@ def stream_effective_spread(
     (symbol, kind 0=quote/1=trade, event_ts, ingest_ts, bid_px, ask_px,
     bid_sz, ask_sz, price), equal to the batch `effective_spread` row
     for that bucket (property-tested)."""
-    return merged.groupBy("symbol").applyInPandasWithState(
-        make_espread_processor(allowed_lateness_s),
-        outputStructType=ESPREAD_OUTPUT_SCHEMA,
-        stateStructType=ESPREAD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return apply_fold(merged, make_espread_processor(allowed_lateness_s))
 
 
 # --- streaming ACF twin (round 7 seventh wave) -----------------------------
@@ -723,52 +589,17 @@ def make_acf_processor(
     bars restricted to closed buckets (property-tested across random
     tapes and micro-batch boundaries, including the NULL variance
     guards)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ACF_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, prev_close, ring,
-             m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-            m_n, m_sx, m_sy = list(m_n), list(m_sx), list(m_sy)
-            m_sxy, m_sxx, m_syy = list(m_sxy), list(m_sxx), list(m_syy)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            ring = []
-            m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy = (
-                [0] * max_lag for _ in range(6)
-            )
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_close, prev_close, ring, *moments = body
+        ring = list(ring)
+        m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy = (list(m) for m in moments)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, close):
             nonlocal prev_close, ring
             if prev_close is not None:
-                dp = cur_close - prev_close
+                dp = close - prev_close
                 for k in range(1, max_lag + 1):
                     if len(ring) >= k:
                         y = ring[-k]
@@ -786,41 +617,23 @@ def make_acf_processor(
                     i = k - 1
                     if m_n[i] > 0:
                         rows.append((
-                            symbol, int(cur_b), k, int(m_n[i]),
+                            b, k, m_n[i],
                             _acf_solve(m_n[i], m_sx[i], m_sy[i],
                                        m_sxy[i], m_sxx[i], m_syy[i]),
-                            int(n_late),
                         ))
-            prev_close = cur_close
+            prev_close = close
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(prev_close) if prev_close is not None else None,
-            [int(x) for x in ring],
-            [int(x) for x in m_n], [int(x) for x in m_sx],
-            [int(x) for x in m_sy], [int(x) for x in m_sxy],
-            [int(x) for x in m_sxx], [int(x) for x in m_syy],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in ACF_OUTPUT_SCHEMA.fields]
+        cur_b, cur_close = walk_buckets(
+            events, bucket_ms, cur_b, cur_close, _last_price, close_bucket
         )
-        out["acf"] = out["acf"].astype(object).where(pd.notna(out["acf"]), None)
-        yield out
+        return rows, (cur_b, cur_close, prev_close, ring,
+                      m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy)
 
-    return fn
+    return fold_processor(
+        ACF_STATE_SCHEMA, ACF_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, None, ()) + ((0,) * max_lag,) * 6, fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_acf(
@@ -831,12 +644,8 @@ def stream_acf(
 ) -> DataFrame:
     """Live serial-dependence profile: per closed minute bucket, one row
     per lag with the ACF re-solved over all closed buckets so far."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_acf_processor(bucket_ms, max_lag, allowed_lateness_s),
-        outputStructType=ACF_OUTPUT_SCHEMA,
-        stateStructType=ACF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_acf_processor(bucket_ms, max_lag, allowed_lateness_s)
     )
 
 
@@ -921,48 +730,17 @@ def make_vr_processor(
 
     if q is None:
         q = VR_HORIZON
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in VR_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, prev_close, ring,
-             n1, sx_u, sxx_u, nq, sq_u, sqq_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            ring = []
-            n1 = sx_u = sxx_u = nq = sq_u = sqq_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        (cur_b, cur_close, prev_close, ring,
+         n1, sx_u, sxx_u, nq, sq_u, sqq_u) = body
+        ring = list(ring)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, close):
             nonlocal prev_close, ring, n1, sx_u, sxx_u, nq, sq_u, sqq_u
             if prev_close is not None:
-                dp = cur_close - prev_close
+                dp = close - prev_close
                 n1 += 1
                 sx_u += dp
                 sxx_u += dp * dp
@@ -974,39 +752,20 @@ def make_vr_processor(
                     sqq_u += qs * qs
                     ring = ring[1:]
                 v1, vq, vr = _vr_solve(n1, sx_u, sxx_u, nq, sq_u, sqq_u, q)
-                rows.append(
-                    (symbol, int(cur_b), int(n1), int(nq), v1, vq, vr,
-                     int(n_late))
-                )
-            prev_close = cur_close
+                rows.append((b, n1, nq, v1, vq, vr))
+            prev_close = close
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(prev_close) if prev_close is not None else None,
-            [int(x) for x in ring],
-            int(n1), int(sx_u), int(sxx_u), int(nq), int(sq_u), int(sqq_u),
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in VR_OUTPUT_SCHEMA.fields]
+        cur_b, cur_close = walk_buckets(
+            events, bucket_ms, cur_b, cur_close, _last_price, close_bucket
         )
-        for c in ("var_1", "var_q", "variance_ratio"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_close, prev_close, ring,
+                      n1, sx_u, sxx_u, nq, sq_u, sqq_u)
 
-    return fn
+    return fold_processor(
+        VR_STATE_SCHEMA, VR_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, None, (), 0, 0, 0, 0, 0, 0), fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_variance_ratio(
@@ -1016,12 +775,8 @@ def stream_variance_ratio(
 ) -> DataFrame:
     """Live variance ratio: one append-final row per closed minute
     bucket with VR(q) re-solved over all closed buckets so far."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_vr_processor(bucket_ms, None, allowed_lateness_s),
-        outputStructType=VR_OUTPUT_SCHEMA,
-        stateStructType=VR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_vr_processor(bucket_ms, None, allowed_lateness_s)
     )
 
 
@@ -1086,58 +841,28 @@ def make_twa_processor(allowed_lateness_s: int = 0):
     cf. reference: extends the surface (live form of the engine's own
     batch TWA extension; the reference's BBA features are
     arrival-weighted, `feature_builder.py:220-225`)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["event_ts", "ingest_ts", "bid_px", "ask_px",
-                "bid_sz", "ask_sz"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in TWA_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_ing, n_late, p_ts, p_ing, p_b, p_a, p_bs, p_as,
-             lq_ts, lq_spread, cur_b, cur_n, cur_w, cur_sw) = state.get
-            pend = list(zip(p_ts, p_ing, p_b, p_a, p_bs, p_as))
-        else:
-            f_ts = f_ing = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            lq_ts, lq_spread = None, 0.0
-            cur_b, cur_n, cur_w, cur_sw = None, 0, 0, 0.0
-
-        new = (
+    def event_tuples(ev):
+        return (
             (int(ts), int(ing), float(b), float(a), float(bs), float(asz))
             for ts, ing, b, a, bs, asz in zip(
                 ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
                 ev["ask_px"], ev["bid_sz"], ev["ask_sz"],
             )
         )
-        fold, pend, (f_ts, f_ing), late_inc = merge_fold(
-            new, pend, (f_ts, f_ing), late_ms
-        )
-        n_late += late_inc
 
+    def fold(events, body):
+        lq_ts, lq_spread, cur_b, cur_n, cur_w, cur_sw = body
         rows = []
-
-        def emit():
-            rows.append((
-                symbol, int(cur_b), int(cur_n), int(cur_w),
-                _round6(cur_sw / cur_w), int(n_late),
-            ))
-
-        for ts, _ing, b, a, _bs, _asz in fold:
+        for ts, _ing, b, a, _bs, _asz in events:
             if lq_ts is not None and ts > lq_ts:
                 # close interval [lq_ts, ts) at the standing spread
                 for bkt in range(lq_ts // 60000, (ts - 1) // 60000 + 1):
                     if cur_b is None:
                         cur_b = bkt
                     elif bkt != cur_b:
-                        emit()
+                        rows.append((cur_b, cur_n, cur_w,
+                                     _round6(cur_sw / cur_w)))
                         cur_b, cur_n, cur_w, cur_sw = bkt, 0, 0, 0.0
                     ov = (min(ts, (bkt + 1) * 60000)
                           - max(lq_ts, bkt * 60000))
@@ -1146,28 +871,20 @@ def make_twa_processor(allowed_lateness_s: int = 0):
                     cur_sw += lq_spread * ov
                 # buckets strictly below the new quote's bucket are final
                 if cur_b is not None and cur_b < ts // 60000:
-                    emit()
+                    rows.append((cur_b, cur_n, cur_w,
+                                 _round6(cur_sw / cur_w)))
                     cur_b, cur_n, cur_w, cur_sw = None, 0, 0, 0.0
             # duplicate-instant quotes: zero lifetime, the later quote in
             # fold order (the batch lexicographic-max tie rule) replaces
             lq_ts = ts
             lq_spread = (a - b) / ((b + a) / 2.0) * 10000.0
+        return rows, (lq_ts, lq_spread, cur_b, cur_n, cur_w, cur_sw)
 
-        state.update((
-            int(f_ts), int(f_ing), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
-            int(lq_ts) if lq_ts is not None else None,
-            float(lq_spread),
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), int(cur_w), float(cur_sw),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in TWA_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_processor(
+        TWA_STATE_SCHEMA, TWA_OUTPUT_SCHEMA,
+        ["event_ts", "ingest_ts", "bid_px", "ask_px", "bid_sz", "ask_sz"],
+        event_tuples, (None, 0.0, None, 0, 0, 0.0), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_twa_spread(
@@ -1177,13 +894,7 @@ def stream_twa_spread(
     (symbol, minute) bucket over a quote stream carrying (symbol,
     event_ts, ingest_ts, bid_px, ask_px, bid_sz, ask_sz), equal to the
     batch `twa_spread` row for that bucket (property-tested)."""
-    return quotes.groupBy("symbol").applyInPandasWithState(
-        make_twa_processor(allowed_lateness_s),
-        outputStructType=TWA_OUTPUT_SCHEMA,
-        stateStructType=TWA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return apply_fold(quotes, make_twa_processor(allowed_lateness_s))
 
 
 # --- streaming RSI twin (round 8) -------------------------------------------
@@ -1232,46 +943,16 @@ def make_rsi_processor(
 
     if period is None:
         period = RSI_PERIOD
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in RSI_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, prev_close, ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            ring = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_close, prev_close, ring = body
+        ring = list(ring)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, close):
             nonlocal prev_close, ring
             if prev_close is not None:
-                ring.append(cur_close - prev_close)
+                ring.append(close - prev_close)
                 if len(ring) > period:
                     ring = ring[1:]
                 if len(ring) == period:
@@ -1283,34 +964,18 @@ def make_rsi_processor(
                     rsi_v = (
                         _round6(100.0 * g / (g + l)) if g + l > 0.0 else None
                     )
-                    rows.append((symbol, int(cur_b), rsi_v, int(n_late)))
-            prev_close = cur_close
+                    rows.append((b, rsi_v))
+            prev_close = close
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(prev_close) if prev_close is not None else None,
-            [int(x) for x in ring],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in RSI_OUTPUT_SCHEMA.fields]
+        cur_b, cur_close = walk_buckets(
+            events, bucket_ms, cur_b, cur_close, _last_price, close_bucket
         )
-        out["rsi"] = out["rsi"].astype(object).where(pd.notna(out["rsi"]), None)
-        yield out
+        return rows, (cur_b, cur_close, prev_close, ring)
 
-    return fn
+    return fold_processor(
+        RSI_STATE_SCHEMA, RSI_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, None, ()), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_rsi(
@@ -1322,12 +987,8 @@ def stream_rsi(
     """Live RSI: one append-final row per closed minute bucket once the
     Δclose ring holds a full ``period``, equal to the batch
     windows.rsi row for that bucket (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_rsi_processor(bucket_ms, period, allowed_lateness_s),
-        outputStructType=RSI_OUTPUT_SCHEMA,
-        stateStructType=RSI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_rsi_processor(bucket_ms, period, allowed_lateness_s)
     )
 
 
@@ -1379,49 +1040,19 @@ def make_atr_processor(
 
     if period is None:
         period = ATR_PERIOD
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ATR_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_h, cur_l, cur_c, prev_c, ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_h = cur_l = cur_c = prev_c = None
-            ring = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_h, cur_l, cur_c, prev_c, ring = body
+        ring = list(ring)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, bar):
             nonlocal prev_c, ring
+            hi, lo, close = bar
             if prev_c is None:
-                tr = cur_h - cur_l
+                tr = hi - lo
             else:
-                tr = max(cur_h - cur_l, abs(cur_h - prev_c),
-                         abs(cur_l - prev_c))
+                tr = max(hi - lo, abs(hi - prev_c), abs(lo - prev_c))
             ring.append(tr)
             if len(ring) > period:
                 ring = ring[1:]
@@ -1429,40 +1060,20 @@ def make_atr_processor(
                 # batch: av = double(decimal sum)/n; r6(av), r6(av/close)
                 s = float(Fraction(sum(ring), UNITS))
                 av = s / period
-                close_d = float(Fraction(cur_c, UNITS))
-                rows.append((
-                    symbol, int(cur_b), _round6(av),
-                    _round6(av / close_d), int(n_late),
-                ))
-            prev_c = cur_c
+                close_d = float(Fraction(close, UNITS))
+                rows.append((b, _round6(av), _round6(av / close_d)))
+            prev_c = close
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b, cur_h, cur_l = b, p_u, p_u
-            elif b != cur_b:
-                close_bucket()
-                cur_b, cur_h, cur_l = b, p_u, p_u
-            cur_h = max(cur_h, p_u)
-            cur_l = min(cur_l, p_u)
-            cur_c = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_h) if cur_h is not None else None,
-            int(cur_l) if cur_l is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            int(prev_c) if prev_c is not None else None,
-            [int(x) for x in ring],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in ATR_OUTPUT_SCHEMA.fields]
+        cur_b, (cur_h, cur_l, cur_c) = walk_buckets(
+            events, bucket_ms, cur_b, (cur_h, cur_l, cur_c), _hlc,
+            close_bucket,
         )
+        return rows, (cur_b, cur_h, cur_l, cur_c, prev_c, ring)
 
-    return fn
+    return fold_processor(
+        ATR_STATE_SCHEMA, ATR_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, None, None, None, ()), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_atr(
@@ -1474,12 +1085,8 @@ def stream_atr(
     """Live ATR: one append-final row per closed minute bucket once the
     TR ring is full, equal to the batch windows.atr row
     (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_atr_processor(bucket_ms, period, allowed_lateness_s),
-        outputStructType=ATR_OUTPUT_SCHEMA,
-        stateStructType=ATR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_atr_processor(bucket_ms, period, allowed_lateness_s)
     )
 
 
@@ -1555,48 +1162,14 @@ def make_macd_processor(
         MACD_WINDOW,
     )
 
-    late_ms = allowed_lateness_s * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in MACD_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_c, c_ring, m_ring, prev_hist) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            c_ring = list(c_ring)
-            m_ring = list(m_ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_c = None
-            c_ring = []
-            m_ring = []
-            prev_hist = None
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_c, c_ring, m_ring, prev_hist = body
+        c_ring, m_ring = list(c_ring), list(m_ring)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, close):
             nonlocal c_ring, m_ring, prev_hist
-            c_ring.append(cur_c)
+            c_ring.append(close)
             if len(c_ring) > MACD_WINDOW:
                 c_ring = c_ring[1:]
             # newest-first doubles, exactly the batch reversed list
@@ -1615,41 +1188,20 @@ def make_macd_processor(
             else:
                 cross = (hist > 0) != (prev_hist > 0)
             rows.append((
-                symbol, int(cur_b), _round6(macd_raw), _round6(sig_raw),
-                hist, cross, len(c_ring), int(n_late),
+                b, _round6(macd_raw), _round6(sig_raw), hist, cross,
+                len(c_ring),
             ))
             prev_hist = hist
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_c = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            [int(x) for x in c_ring],
-            [float(x) for x in m_ring],
-            prev_hist,
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in MACD_OUTPUT_SCHEMA.fields]
+        cur_b, cur_c = walk_buckets(
+            events, bucket_ms, cur_b, cur_c, _last_price, close_bucket
         )
-        out["crossover"] = (
-            out["crossover"].astype(object).where(
-                pd.notna(out["crossover"]), None
-            )
-        )
-        yield out
+        return rows, (cur_b, cur_c, c_ring, m_ring, prev_hist)
 
-    return fn
+    return fold_processor(
+        MACD_STATE_SCHEMA, MACD_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, (), (), None), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_macd(
@@ -1659,12 +1211,8 @@ def stream_macd(
 ) -> DataFrame:
     """Live MACD: one append-final row per closed minute bucket, equal
     to the batch windows.macd row (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_macd_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=MACD_OUTPUT_SCHEMA,
-        stateStructType=MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_macd_processor(bucket_ms, allowed_lateness_s)
     )
 
 
@@ -1765,68 +1313,46 @@ def make_markout_processor(allowed_lateness_s: int = 0):
             f"({max_h} ms) for the emission rule to be safe"
         )
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["kind", "event_ts", "ingest_ts", "bid_px", "ask_px",
-                "price", "is_buyer_maker"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in MARKOUT_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_k2, n_late, p_ts, p_k2, p_b, p_a, p_px, p_mk,
-             q_avail, q_bid, q_ask, t_ts, t_px, t_mk, t_mid0, t_mo,
-             seen_key, bk_id, bk_n, bk_s) = state.get
-            pend = list(zip(p_ts, p_k2, p_b, p_a, p_px, p_mk))
-            q_hist = list(zip(q_avail, q_bid, q_ask))
-            # rebuild the per-horizon queues: len(mo) routes each trade,
-            # and the saved flat order (queue-by-queue, ts-ascending
-            # within) keeps every queue ts-sorted on reload
-            queues = [deque() for _ in hs]
-            for ts, px, mk, m0, mo in zip(t_ts, t_px, t_mk, t_mid0, t_mo):
-                queues[len(mo)].append([ts, px, mk, m0, list(mo)])
-            # identity-dedup keys grouped BY BUCKET (flat ts:px:mk state
-            # strings, bucket = ts div 60000): emission then drops a whole
-            # bucket's keys in O(1) instead of rescanning every key per
-            # emitted bucket — the r10 skew streaming bench's profile put
-            # 87% of the processor in that rescan on a hot-symbol tape
-            seen = {}
-            for k in seen_key:
-                seen.setdefault(
-                    int(k.split(":")[0]) // 60000, set()
-                ).add(k)
-            buckets = {
-                b: [n, list(s)] for b, n, s in zip(bk_id, bk_n, bk_s)
-            }
-        else:
-            f_ts = f_k2 = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            q_hist = []
-            queues = [deque() for _ in hs]
-            seen = {}
-            buckets = {}
+    def event_tuples(ev):
+        for k, ts, ing, b, a, px, mk in zip(
+            ev["kind"], ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
+            ev["ask_px"], ev["price"], ev["is_buyer_maker"],
+        ):
+            if int(k) == 0:
+                yield (int(ts) + 1, int(ing),
+                       int(round(float(b) * UNITS)),
+                       int(round(float(a) * UNITS)), -1, False)
+            else:
+                yield (int(ts), _ISQ_SHIFT + int(ing), -1, -1,
+                       int(round(float(px) * UNITS)), bool(mk))
 
-        def tuples():
-            for k, ts, ing, b, a, px, mk in zip(
-                ev["kind"], ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
-                ev["ask_px"], ev["price"], ev["is_buyer_maker"],
-            ):
-                if int(k) == 0:
-                    yield (int(ts) + 1, int(ing),
-                           int(round(float(b) * UNITS)),
-                           int(round(float(a) * UNITS)), -1, False)
-                else:
-                    yield (int(ts), _ISQ_SHIFT + int(ing), -1, -1,
-                           int(round(float(px) * UNITS)), bool(mk))
-
-        fold, pend, (f_ts, f_k2), late_inc = merge_fold(
-            tuples(), pend, (f_ts, f_k2), late_ms
-        )
-        n_late += late_inc
+    def fold(events, body):
+        if not events:
+            # the frontier did not move: nothing new matures or emits
+            return [], body
+        f_ts = events[-1][0]  # the frontier merge_fold advanced to
+        (q_avail, q_bid, q_ask, t_ts, t_px, t_mk, t_mid0, t_mo,
+         seen_key, bk_id, bk_n, bk_s) = body
+        q_hist = list(zip(q_avail, q_bid, q_ask))
+        # rebuild the per-horizon queues: len(mo) routes each trade,
+        # and the saved flat order (queue-by-queue, ts-ascending
+        # within) keeps every queue ts-sorted on reload
+        queues = [deque() for _ in hs]
+        for ts, px, mk, m0, mo in zip(t_ts, t_px, t_mk, t_mid0, t_mo):
+            queues[len(mo)].append([ts, px, mk, m0, list(mo)])
+        # identity-dedup keys grouped BY BUCKET (flat ts:px:mk state
+        # strings, bucket = ts div 60000): emission then drops a whole
+        # bucket's keys in O(1) instead of rescanning every key per
+        # emitted bucket — the r10 skew streaming bench's profile put
+        # 87% of the processor in that rescan on a hot-symbol tape
+        seen = {}
+        for k in seen_key:
+            seen.setdefault(
+                int(k.split(":")[0]) // 60000, set()
+            ).add(k)
+        buckets = {
+            b: [n, list(s)] for b, n, s in zip(bk_id, bk_n, bk_s)
+        }
 
         def mid_at(x):
             """Prevailing mid at instant x: last quote with avail <= x
@@ -1871,7 +1397,7 @@ def make_markout_processor(allowed_lateness_s: int = 0):
                         # in one call is re-examined this same pass
                         queues[j + 1].append(tr)
 
-        for s_ts, k2, b_u, a_u, px_u, mk in fold:
+        for s_ts, k2, b_u, a_u, px_u, mk in events:
             finalize(s_ts)
             if k2 < _ISQ_SHIFT:  # quote
                 q_hist.append((s_ts, b_u, a_u))
@@ -1892,9 +1418,8 @@ def make_markout_processor(allowed_lateness_s: int = 0):
             if f_ts >= (b + 1) * 60000 + max_h:
                 n, sums = buckets.pop(b)
                 rows.append((
-                    symbol, int(b), int(n),
-                    _round6(sums[0] / n), _round6(sums[1] / n),
-                    _round6(sums[2] / n), int(n_late),
+                    b, n, _round6(sums[0] / n), _round6(sums[1] / n),
+                    _round6(sums[2] / n),
                 ))
                 # identity keys of an emitted bucket can never recur
                 # (the frontier is past the bucket) — O(1) per emission
@@ -1926,11 +1451,7 @@ def make_markout_processor(allowed_lateness_s: int = 0):
         trades = sorted(
             (t for q in queues for t in q), key=lambda t: (t[0], len(t[4]))
         )
-        state.update((
-            int(f_ts), int(f_k2), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
+        return rows, (
             [q[0] for q in q_hist], [q[1] for q in q_hist],
             [q[2] for q in q_hist],
             [t[0] for t in trades], [t[1] for t in trades],
@@ -1940,12 +1461,14 @@ def make_markout_processor(allowed_lateness_s: int = 0):
             sorted(buckets),
             [buckets[b][0] for b in sorted(buckets)],
             [[float(v) for v in buckets[b][1]] for b in sorted(buckets)],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in MARKOUT_OUTPUT_SCHEMA.fields]
         )
 
-    return fn
+    return fold_processor(
+        MARKOUT_STATE_SCHEMA, MARKOUT_OUTPUT_SCHEMA,
+        ["kind", "event_ts", "ingest_ts", "bid_px", "ask_px", "price",
+         "is_buyer_maker"],
+        event_tuples, ((),) * 12, fold, late_ms,
+    )
 
 
 def stream_markout(
@@ -1956,13 +1479,7 @@ def stream_markout(
     equal to the batch `markout` row (property-tested).  Input carries
     (symbol, kind 0=quote/1=trade, event_ts, ingest_ts, bid_px, ask_px,
     price, is_buyer_maker)."""
-    return merged.groupBy("symbol").applyInPandasWithState(
-        make_markout_processor(allowed_lateness_s),
-        outputStructType=MARKOUT_OUTPUT_SCHEMA,
-        stateStructType=MARKOUT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return apply_fold(merged, make_markout_processor(allowed_lateness_s))
 
 
 # --- streaming stochastic-oscillator twin (round 8) --------------------------
@@ -2019,48 +1536,17 @@ def make_stoch_processor(
 
     if period is None:
         period = STOCH_PERIOD
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in STOCH_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_h, cur_l, cur_c, hi_ring, lo_ring, k_ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            hi_ring, lo_ring, k_ring = (
-                list(hi_ring), list(lo_ring), list(k_ring)
-            )
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_h = cur_l = cur_c = None
-            hi_ring, lo_ring, k_ring = [], [], []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_h, cur_l, cur_c, hi_ring, lo_ring, k_ring = body
+        hi_ring, lo_ring, k_ring = list(hi_ring), list(lo_ring), list(k_ring)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, bar):
             nonlocal hi_ring, lo_ring, k_ring
-            hi_ring.append(cur_h)
-            lo_ring.append(cur_l)
+            hi, lo, close = bar
+            hi_ring.append(hi)
+            lo_ring.append(lo)
             if len(hi_ring) > period:
                 hi_ring, lo_ring = hi_ring[1:], lo_ring[1:]
             if len(hi_ring) < period:
@@ -2070,7 +1556,7 @@ def make_stoch_processor(
                 # the SAME doubles as the batch bar columns
                 k = _round6(
                     100.0
-                    * (float(Fraction(cur_c, UNITS))
+                    * (float(Fraction(close, UNITS))
                        - float(Fraction(ll, UNITS)))
                     / (float(Fraction(hh, UNITS))
                        - float(Fraction(ll, UNITS)))
@@ -2087,38 +1573,18 @@ def make_stoch_processor(
                 d = _round6(d)
             else:
                 d = None
-            rows.append((symbol, int(cur_b), k, d, int(n_late)))
+            rows.append((b, k, d))
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b, cur_h, cur_l = b, p_u, p_u
-            elif b != cur_b:
-                close_bucket()
-                cur_b, cur_h, cur_l = b, p_u, p_u
-            cur_h = max(cur_h, p_u)
-            cur_l = min(cur_l, p_u)
-            cur_c = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_h) if cur_h is not None else None,
-            int(cur_l) if cur_l is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            [int(x) for x in hi_ring], [int(x) for x in lo_ring],
-            [int(x) for x in k_ring],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in STOCH_OUTPUT_SCHEMA.fields]
+        cur_b, (cur_h, cur_l, cur_c) = walk_buckets(
+            events, bucket_ms, cur_b, (cur_h, cur_l, cur_c), _hlc,
+            close_bucket,
         )
-        for c in ("k_pct", "d_pct"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_h, cur_l, cur_c, hi_ring, lo_ring, k_ring)
 
-    return fn
+    return fold_processor(
+        STOCH_STATE_SCHEMA, STOCH_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, None, None, (), (), ()), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_stochastic(
@@ -2130,12 +1596,8 @@ def stream_stochastic(
     """Live stochastic %K/%D: one append-final row per closed minute
     bucket once the extremes ring is full, equal to the batch
     windows.stochastic_k row (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_stoch_processor(bucket_ms, period, allowed_lateness_s),
-        outputStructType=STOCH_OUTPUT_SCHEMA,
-        stateStructType=STOCH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_stoch_processor(bucket_ms, period, allowed_lateness_s)
     )
 
 
@@ -2180,90 +1642,36 @@ def make_obv_processor(
     batch operator's DECIMAL prefix sum over bars restricted to closed
     buckets (property-tested).  Disorder discipline: merge_fold
     bounded-lateness pool, hard-late drop-and-count."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price", "qty"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in OBV_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr, p_q,
-             cur_b, cur_close, cur_vol, prev_close, obv_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr, p_q))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            cur_vol = obv_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)),
-             int(round(float(q) * UNITS)))
-            for ts, tid, p, q in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"], ev["qty"]
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_close, cur_vol, prev_close, obv_u = body
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, bar):
             nonlocal prev_close, obv_u
-            if prev_close is None or cur_close == prev_close:
+            close, vol = bar
+            if prev_close is None or close == prev_close:
                 signed = 0
-            elif cur_close > prev_close:
-                signed = cur_vol
+            elif close > prev_close:
+                signed = vol
             else:
-                signed = -cur_vol
+                signed = -vol
             obv_u += signed
             rows.append((
-                symbol,
-                int(cur_b),
-                float(Fraction(cur_vol, UNITS)),
-                float(Fraction(obv_u, UNITS)),
-                int(n_late),
+                b, float(Fraction(vol, UNITS)), float(Fraction(obv_u, UNITS))
             ))
-            prev_close = cur_close
+            prev_close = close
 
-        for ts, tid, p_u, q_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-                cur_vol = 0
-            cur_close = p_u
-            cur_vol += q_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(cur_vol),
-            int(prev_close) if prev_close is not None else None,
-            int(obv_u),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in OBV_OUTPUT_SCHEMA.fields]
+        cur_b, (cur_close, cur_vol) = walk_buckets(
+            events, bucket_ms, cur_b, (cur_close, cur_vol), _close_vol,
+            close_bucket,
         )
+        return rows, (cur_b, cur_close, cur_vol, prev_close, obv_u)
 
-    return fn
+    return fold_processor(
+        OBV_STATE_SCHEMA, OBV_OUTPUT_SCHEMA, _QTY_COLS, _qty_events,
+        (None, None, 0, None, 0), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_obv(
@@ -2273,12 +1681,8 @@ def stream_obv(
 ) -> DataFrame:
     """Live OBV: one append-final row per closed minute bucket, equal to
     the batch windows.obv row for that bar (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_obv_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=OBV_OUTPUT_SCHEMA,
-        stateStructType=OBV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_obv_processor(bucket_ms, allowed_lateness_s)
     )
 
 
@@ -2343,7 +1747,6 @@ def make_boll_processor(
         period = BOLL_PERIOD
     if k is None:
         k = BOLL_K
-    late_ms = allowed_lateness_s * 1000
     # the day-scorecard twins derive the day as cur_b // buckets_per_day,
     # which equals the batch form's `bucket div 1440` ONLY when bucket_ms
     # divides a day exactly — a non-divisor width would silently emit
@@ -2354,62 +1757,30 @@ def make_boll_processor(
     )
     buckets_per_day = 86_400_000 // bucket_ms
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in BOLL_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, ring,
-             cur_day, day_n, day_up, day_lo, day_bw) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = cur_day = None
-            ring = []
-            day_n = day_up = day_lo = 0
-            day_bw = 0.0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        (cur_b, cur_close, ring,
+         cur_day, day_n, day_up, day_lo, day_bw) = body
+        ring = list(ring)
         rows = []
 
         def emit_day():
             nonlocal day_n, day_up, day_lo, day_bw
             if day_n > 0:
                 rows.append((
-                    symbol, int(cur_day), int(day_n), int(day_up),
-                    int(day_lo), _round6(day_bw / day_n), int(n_late),
+                    cur_day, day_n, day_up, day_lo, _round6(day_bw / day_n)
                 ))
             day_n = day_up = day_lo = 0
             day_bw = 0.0
 
-        def close_bucket():
+        def close_bucket(b, close_u):
             nonlocal ring, cur_day, day_n, day_up, day_lo, day_bw
-            day = cur_b // buckets_per_day
+            day = b // buckets_per_day
             if cur_day is None:
                 cur_day = day
             elif day != cur_day:
                 emit_day()
                 cur_day = day
-            ring.append(cur_close)
+            ring.append(close_u)
             if len(ring) > period:
                 ring = ring[1:]
             if len(ring) == period:
@@ -2419,7 +1790,7 @@ def make_boll_processor(
                 mean = s1 / period
                 var = max(0.0, s2 / period - mean * mean)
                 std = var ** 0.5
-                close = float(Fraction(cur_close, UNITS))
+                close = float(Fraction(close_u, UNITS))
                 day_n += 1
                 if close > mean + k * std:
                     day_up += 1
@@ -2427,30 +1798,17 @@ def make_boll_processor(
                     day_lo += 1
                 day_bw += 2.0 * k * std / mean
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            [int(x) for x in ring],
-            int(cur_day) if cur_day is not None else None,
-            int(day_n), int(day_up), int(day_lo), float(day_bw),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in BOLL_OUTPUT_SCHEMA.fields]
+        cur_b, cur_close = walk_buckets(
+            events, bucket_ms, cur_b, cur_close, _last_price, close_bucket
         )
+        return rows, (cur_b, cur_close, ring,
+                      cur_day, day_n, day_up, day_lo, day_bw)
 
-    return fn
+    return fold_processor(
+        BOLL_STATE_SCHEMA, BOLL_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, (), None, 0, 0, 0, 0.0), fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_bollinger(
@@ -2464,12 +1822,8 @@ def stream_bollinger(
     (symbol, day) once a later day's bucket closes, equal to the batch
     windows.bollinger_breach row over bars restricted to closed buckets
     and completed days (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_boll_processor(bucket_ms, period, k, allowed_lateness_s),
-        outputStructType=BOLL_OUTPUT_SCHEMA,
-        stateStructType=BOLL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_boll_processor(bucket_ms, period, k, allowed_lateness_s)
     )
 
 
@@ -2515,95 +1869,39 @@ def make_momentum_processor(
     so the emitted differences are the batch DECIMAL-exact values
     (property-tested; the first bar's NULL momentum and the second
     bar's NULL acceleration included)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price", "qty"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in MOM_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr, p_q,
-             cur_b, cur_close, cur_vol,
-             prev_close, prev_mom, prev_vol) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr, p_q))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = prev_mom = prev_vol = None
-            cur_vol = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)),
-             int(round(float(q) * UNITS)))
-            for ts, tid, p, q in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"], ev["qty"]
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_close, cur_vol, prev_close, prev_mom, prev_vol = body
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, bar):
             nonlocal prev_close, prev_mom, prev_vol
-            mom = None if prev_close is None else cur_close - prev_close
+            close, vol = bar
+            mom = None if prev_close is None else close - prev_close
             accel = (
                 None if mom is None or prev_mom is None else mom - prev_mom
             )
-            vt = None if prev_vol is None else cur_vol - prev_vol
+            vt = None if prev_vol is None else vol - prev_vol
             rows.append((
-                symbol,
-                int(cur_b),
-                float(Fraction(cur_close, UNITS)),
+                b,
+                float(Fraction(close, UNITS)),
                 None if mom is None else float(Fraction(mom, UNITS)),
                 None if accel is None else float(Fraction(accel, UNITS)),
                 None if vt is None else float(Fraction(vt, UNITS)),
-                int(n_late),
             ))
-            prev_close, prev_mom, prev_vol = cur_close, mom, cur_vol
+            prev_close, prev_mom, prev_vol = close, mom, vol
 
-        for ts, tid, p_u, q_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-                cur_vol = 0
-            cur_close = p_u
-            cur_vol += q_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(cur_vol),
-            int(prev_close) if prev_close is not None else None,
-            int(prev_mom) if prev_mom is not None else None,
-            int(prev_vol) if prev_vol is not None else None,
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in MOM_OUTPUT_SCHEMA.fields]
+        cur_b, (cur_close, cur_vol) = walk_buckets(
+            events, bucket_ms, cur_b, (cur_close, cur_vol), _close_vol,
+            close_bucket,
         )
-        for c in ("momentum", "acceleration", "volume_trend"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_close, cur_vol,
+                      prev_close, prev_mom, prev_vol)
 
-    return fn
+    return fold_processor(
+        MOM_STATE_SCHEMA, MOM_OUTPUT_SCHEMA, _QTY_COLS, _qty_events,
+        (None, None, 0, None, None, None), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_momentum(
@@ -2614,12 +1912,8 @@ def stream_momentum(
     """Live momentum/acceleration/volume-trend: one append-final row per
     closed minute bucket, equal to the batch windows.momentum row
     (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_momentum_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=MOM_OUTPUT_SCHEMA,
-        stateStructType=MOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_momentum_processor(bucket_ms, allowed_lateness_s)
     )
 
 
@@ -2669,91 +1963,42 @@ def make_drawdown_processor(
     doubles the batch close/peak − 1.0 derives (Fraction-exact unit
     conversion, Python tuple order = the batch struct-min order since
     bucket is unique per symbol)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in DD_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, peak, n_bars,
-             w_dd, w_b, w_peak, w_close) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = peak = None
-            n_bars = 0
-            w_dd = w_b = w_peak = w_close = None
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        (cur_b, cur_close, peak, n_bars,
+         w_dd, w_b, w_peak, w_close) = body
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, close):
             nonlocal peak, n_bars, w_dd, w_b, w_peak, w_close
-            peak = cur_close if peak is None else max(peak, cur_close)
+            peak = close if peak is None else max(peak, close)
             n_bars += 1
-            close_d = float(Fraction(cur_close, UNITS))
+            close_d = float(Fraction(close, UNITS))
             peak_d = float(Fraction(peak, UNITS))
             dd = close_d / peak_d - 1.0
-            cand = (dd, int(cur_b), peak, cur_close)
+            cand = (dd, b, peak, close)
             if w_dd is None or cand < (w_dd, w_b, w_peak, w_close):
                 w_dd, w_b, w_peak, w_close = cand
             rows.append((
-                symbol,
-                int(cur_b),
-                int(n_bars),
+                b,
+                n_bars,
                 _round6(w_dd),
-                int(w_b),
+                w_b,
                 _round6(float(Fraction(w_peak, UNITS))),
                 _round6(float(Fraction(w_close, UNITS))),
-                int(n_late),
             ))
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(peak) if peak is not None else None,
-            int(n_bars),
-            float(w_dd) if w_dd is not None else None,
-            int(w_b) if w_b is not None else None,
-            int(w_peak) if w_peak is not None else None,
-            int(w_close) if w_close is not None else None,
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in DD_OUTPUT_SCHEMA.fields]
+        cur_b, cur_close = walk_buckets(
+            events, bucket_ms, cur_b, cur_close, _last_price, close_bucket
         )
+        return rows, (cur_b, cur_close, peak, n_bars,
+                      w_dd, w_b, w_peak, w_close)
 
-    return fn
+    return fold_processor(
+        DD_STATE_SCHEMA, DD_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, None, 0, None, None, None, None), fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_drawdown(
@@ -2764,12 +2009,8 @@ def stream_drawdown(
     """Live running max-drawdown summary: one append row per closed
     bucket, equal to the batch windows.drawdown over the bars closed so
     far (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_drawdown_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=DD_OUTPUT_SCHEMA,
-        stateStructType=DD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_drawdown_processor(bucket_ms, allowed_lateness_s)
     )
 
 
@@ -2829,7 +2070,6 @@ def make_candle_processor(
         DOJI_BODY_FRAC,
     )
 
-    late_ms = allowed_lateness_s * 1000
     # the day-scorecard twins derive the day as cur_b // buckets_per_day,
     # which equals the batch form's `bucket div 1440` ONLY when bucket_ms
     # divides a day exactly — a non-divisor width would silently emit
@@ -2840,75 +2080,44 @@ def make_candle_processor(
     )
     buckets_per_day = 86_400_000 // bucket_ms
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in CANDLE_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_o, cur_h, cur_l, cur_c,
-             prev_o, prev_c, cur_day,
-             d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_o = cur_h = cur_l = cur_c = None
-            prev_o = prev_c = cur_day = None
-            d_bars = d_flat = d_doji = d_hammer = d_bull = d_bear = 0
+    def absorb(bar, run):
+        hi, lo, close = _hlc(None if bar is None else bar[1:], run)
+        return (run[0][2] if bar is None else bar[0]), hi, lo, close
 
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        (cur_b, cur_o, cur_h, cur_l, cur_c, prev_o, prev_c, cur_day,
+         d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear) = body
         rows = []
 
         def emit_day():
             nonlocal d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear
             if d_bars > 0:
                 rows.append((
-                    symbol, int(cur_day), int(d_bars), int(d_flat),
-                    int(d_doji), int(d_hammer), int(d_bull), int(d_bear),
-                    int(n_late),
+                    cur_day, d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear
                 ))
             d_bars = d_flat = d_doji = d_hammer = d_bull = d_bear = 0
 
-        def close_bucket():
+        def close_bucket(b, bar):
             nonlocal prev_o, prev_c, cur_day
             nonlocal d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear
-            day = cur_b // buckets_per_day
+            day = b // buckets_per_day
             if cur_day is None:
                 cur_day = day
             elif day != cur_day:
                 emit_day()
                 cur_day = day
-            o = float(Fraction(cur_o, UNITS))
-            h = float(Fraction(cur_h, UNITS))
-            l = float(Fraction(cur_l, UNITS))  # noqa: E741
-            c = float(Fraction(cur_c, UNITS))
-            body = abs(c - o)
+            o, h, l, c = (float(Fraction(u, UNITS)) for u in bar)  # noqa: E741
+            real_body = abs(c - o)
             rng = h - l
             lower = min(o, c) - l
             upper = h - max(o, c)
             d_bars += 1
             if rng == 0.0:
                 d_flat += 1
-            if rng > 0.0 and body <= DOJI_BODY_FRAC * rng:
+            if rng > 0.0 and real_body <= DOJI_BODY_FRAC * rng:
                 d_doji += 1
-            if rng > 0.0 and lower >= 2.0 * body and upper <= body:
+            if (rng > 0.0 and lower >= 2.0 * real_body
+                    and upper <= real_body):
                 d_hammer += 1
             if prev_c is not None:
                 po = float(Fraction(prev_o, UNITS))
@@ -2917,42 +2126,21 @@ def make_candle_processor(
                     d_bull += 1
                 if pc > po and c < o and o >= pc and c <= po:
                     d_bear += 1
-            prev_o, prev_c = cur_o, cur_c
+            prev_o, prev_c = bar[0], bar[3]
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-                cur_o = cur_h = cur_l = p_u
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-                cur_o = cur_h = cur_l = p_u
-            else:
-                cur_h = max(cur_h, p_u)
-                cur_l = min(cur_l, p_u)
-            cur_c = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_o) if cur_o is not None else None,
-            int(cur_h) if cur_h is not None else None,
-            int(cur_l) if cur_l is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            int(prev_o) if prev_o is not None else None,
-            int(prev_c) if prev_c is not None else None,
-            int(cur_day) if cur_day is not None else None,
-            int(d_bars), int(d_flat), int(d_doji),
-            int(d_hammer), int(d_bull), int(d_bear),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in CANDLE_OUTPUT_SCHEMA.fields]
+        cur_b, (cur_o, cur_h, cur_l, cur_c) = walk_buckets(
+            events, bucket_ms, cur_b, (cur_o, cur_h, cur_l, cur_c), absorb,
+            close_bucket,
         )
+        return rows, (cur_b, cur_o, cur_h, cur_l, cur_c, prev_o, prev_c,
+                      cur_day, d_bars, d_flat, d_doji, d_hammer, d_bull,
+                      d_bear)
 
-    return fn
+    return fold_processor(
+        CANDLE_STATE_SCHEMA, CANDLE_OUTPUT_SCHEMA, _PRICE_COLS,
+        _price_events, (None,) * 8 + (0,) * 6, fold,
+        allowed_lateness_s * 1000,
+    )
 
 
 def stream_candle_patterns(
@@ -2964,12 +2152,8 @@ def stream_candle_patterns(
     completed (symbol, day), equal to the batch
     aggregates.candle_patterns row over bars restricted to closed
     buckets (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_candle_processor(bucket_ms, allowed_lateness_s),
-        outputStructType=CANDLE_OUTPUT_SCHEMA,
-        stateStructType=CANDLE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_candle_processor(bucket_ms, allowed_lateness_s)
     )
 
 
@@ -3015,45 +2199,15 @@ def make_rolling_vol_processor(
     rounding grain, so rows EQUAL the batch operator over bars
     restricted to closed buckets (property-tested; the single-bar NULL
     included)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in RVOL_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = None
-            ring = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def fold(events, body):
+        cur_b, cur_close, ring = body
+        ring = list(ring)
         rows = []
 
-        def close_bucket():
+        def close_bucket(b, close):
             nonlocal ring
-            ring.append(cur_close)
+            ring.append(close)
             if len(ring) > nbars:
                 ring = ring[1:]
             n = len(ring)
@@ -3065,43 +2219,17 @@ def make_rolling_vol_processor(
                 vol = _round6(float(var) ** 0.5)
             else:
                 vol = None
-            rows.append((
-                symbol,
-                int(cur_b),
-                float(Fraction(cur_close, UNITS)),
-                vol,
-                int(n),
-                int(n_late),
-            ))
+            rows.append((b, float(Fraction(close, UNITS)), vol, n))
 
-        for ts, tid, p_u in fold:
-            b = ts // bucket_ms
-            if cur_b is None:
-                cur_b = b
-            elif b != cur_b:
-                close_bucket()
-                cur_b = b
-            cur_close = p_u
-
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            [int(x) for x in ring],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in RVOL_OUTPUT_SCHEMA.fields]
+        cur_b, cur_close = walk_buckets(
+            events, bucket_ms, cur_b, cur_close, _last_price, close_bucket
         )
-        out["volatility"] = (
-            out["volatility"].astype(object).where(
-                pd.notna(out["volatility"]), None
-            )
-        )
-        yield out
+        return rows, (cur_b, cur_close, ring)
 
-    return fn
+    return fold_processor(
+        RVOL_STATE_SCHEMA, RVOL_OUTPUT_SCHEMA, _PRICE_COLS, _price_events,
+        (None, None, ()), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_rolling_volatility(
@@ -3113,10 +2241,6 @@ def stream_rolling_volatility(
     """Live trailing-window volatility (W7 twin): one append-final row
     per closed minute bucket, equal to the batch
     windows.rolling_volatility row (property-tested)."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_rolling_vol_processor(bucket_ms, nbars, allowed_lateness_s),
-        outputStructType=RVOL_OUTPUT_SCHEMA,
-        stateStructType=RVOL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_rolling_vol_processor(bucket_ms, nbars, allowed_lateness_s)
     )

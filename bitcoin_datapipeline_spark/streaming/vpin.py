@@ -52,13 +52,11 @@ from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.aggregates import VPIN_BUCKET_VOLUME, VPIN_WINDOW
-from .disorder import _NO_FRONTIER, merge_fold
+from .disorder import apply_fold, fold_processor
 
 # qty grid: 1e-4 (FIXTURES.md).  Integer units assume qty sits on a <=4dp
 # grid — there float->int rounding has no ties, so it agrees with the
@@ -112,51 +110,26 @@ VPIN_STATE_SCHEMA = T.StructType(
     ]
 )
 
+
 def make_vpin_processor(
     bucket_volume: int = VPIN_BUCKET_VOLUME,
     window: int = VPIN_WINDOW,
     allowed_lateness_s: int = 0,
 ):
     v_units = bucket_volume * UNITS
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "qty", "is_buyer_maker"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in VPIN_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (cum, cur_b, cur_n, buy, sell, ring_imb, ring_vol,
-             f_ts, f_tid, n_late,
-             p_ts, p_tid, p_units, p_maker) = state.get
-            ring_imb, ring_vol = list(ring_imb), list(ring_vol)
-            pend = list(zip(p_ts, p_tid, p_units, p_maker))
-        else:
-            cum, cur_b, cur_n, buy, sell = 0, None, 0, 0, 0
-            ring_imb, ring_vol = [], []
-            f_ts, f_tid, n_late = _NO_FRONTIER, _NO_FRONTIER, 0
-            pend = []
-
-        new = (
+    def event_tuples(ev):
+        return (
             (int(ts), int(tid), int(round(float(qty) * UNITS)), bool(maker))
             for ts, tid, qty, maker in zip(
                 ev["event_ts"], ev["trade_id"], ev["qty"],
                 ev["is_buyer_maker"],
             )
         )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
 
+    def fold(events, body):
+        cum, cur_b, cur_n, buy, sell, ring_imb, ring_vol = body
+        ring_imb, ring_vol = list(ring_imb), list(ring_vol)
         rows = []
 
         def close_bucket():
@@ -166,14 +139,12 @@ def make_vpin_processor(
             w_imb = sum(ring_imb) + imb
             w_vol = sum(ring_vol) + vol
             rows.append((
-                symbol,
-                int(cur_b),
-                int(cur_n),
+                cur_b,
+                cur_n,
                 vol / UNITS,
                 imb / UNITS,
                 len(ring_imb) + 1,
                 _round6((w_imb / UNITS) / (w_vol / UNITS)),
-                int(n_late),
             ))
             ring_imb.append(imb)
             ring_vol.append(vol)
@@ -181,7 +152,7 @@ def make_vpin_processor(
             del ring_vol[: max(0, len(ring_vol) - (window - 1))]
             cur_n, buy, sell = 0, 0, 0
 
-        for ts, tid, units, maker in fold:
+        for ts, tid, units, maker in events:
             b = cum // v_units
             if cur_b is None:
                 cur_b = b
@@ -194,21 +165,13 @@ def make_vpin_processor(
             else:
                 buy += units
             cum += units
+        return rows, (cum, cur_b, cur_n, buy, sell, ring_imb, ring_vol)
 
-        state.update((
-            int(cum),
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), int(buy), int(sell),
-            ring_imb, ring_vol,
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in VPIN_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_processor(
+        VPIN_STATE_SCHEMA, VPIN_OUTPUT_SCHEMA,
+        ["event_ts", "trade_id", "qty", "is_buyer_maker"], event_tuples,
+        (0, None, 0, 0, 0, (), ()), fold, allowed_lateness_s * 1000,
+    )
 
 
 def stream_vpin(
@@ -221,10 +184,6 @@ def stream_vpin(
     final row per COMPLETED bucket, ``vpin`` rounded exactly like the
     batch twin; batch-equivalence (minus each symbol's open tail bucket)
     pinned in tests/test_streaming.py and tests/test_properties.py."""
-    return trades.groupBy("symbol").applyInPandasWithState(
-        make_vpin_processor(bucket_volume, window, allowed_lateness_s),
-        outputStructType=VPIN_OUTPUT_SCHEMA,
-        stateStructType=VPIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_fold(
+        trades, make_vpin_processor(bucket_volume, window, allowed_lateness_s)
     )

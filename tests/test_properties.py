@@ -8,6 +8,7 @@ kept small and deadline disabled.
 
 from __future__ import annotations
 
+from conftest import MockGroupState
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
@@ -352,27 +353,12 @@ def test_stream_vpin_processor_matches_batch(spark, batch, n_chunks):
     ]
     V, W = 50, 3
 
-    class _State:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
     fn = make_vpin_processor(bucket_volume=V, window=W)
     cols = ["event_ts", "trade_id", "qty", "is_buyer_maker"]
     emitted = []
     for sym in {r.symbol for r in recs}:
         mine = [r for r in recs if r.symbol == sym]
-        state = _State()
+        state = MockGroupState(fn.state_schema)
         size = max(1, (len(mine) + n_chunks - 1) // n_chunks)
         for i in range(0, len(mine), size):
             pdf = pd.DataFrame(
@@ -688,22 +674,6 @@ def test_bloom_gate_never_false_negative(spark, docs):
         assert r.false_positive == (r.bloom_member and not r.present)
 
 
-class _MockState:
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
 def _drive_processor(fn, recs, cols, n_chunks):
     """Drive a keyed stateful processor chunk-by-chunk per symbol over
     already-ordered records; returns emitted namedtuples."""
@@ -712,7 +682,7 @@ def _drive_processor(fn, recs, cols, n_chunks):
     emitted = []
     for sym in sorted({r.symbol for r in recs}):
         mine = [r for r in recs if r.symbol == sym]
-        state = _MockState()
+        state = MockGroupState(fn.state_schema)
         size = max(1, (len(mine) + n_chunks - 1) // n_chunks)
         for i in range(0, len(mine), size):
             pdf = pd.DataFrame(

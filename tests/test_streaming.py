@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import MockGroupState
 from pyspark.sql import Row
 
 from bitcoin_datapipeline_spark.functions.normalize import valid_trades
@@ -980,22 +981,6 @@ def test_stream_vpin_matches_batch_completed_buckets(spark, tmp_path):
     assert a1["n_trades"] == 2 and a1["bucket_volume"] == 12.0
 
 
-class _VpinState:
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
 def _drive_vpin(batches, **kw):
     """Drive make_vpin_processor chunk-by-chunk for one symbol; returns
     (emitted namedtuple rows, final state tuple)."""
@@ -1004,7 +989,7 @@ def _drive_vpin(batches, **kw):
     from bitcoin_datapipeline_spark.streaming.vpin import make_vpin_processor
 
     fn = make_vpin_processor(**kw)
-    state = _VpinState()
+    state = MockGroupState(fn.state_schema)
     cols = ["event_ts", "trade_id", "qty", "is_buyer_maker"]
     emitted = []
     for batch in batches:
@@ -1195,8 +1180,8 @@ def test_stream_kyle_bounded_lateness_reorders_across_batches(spark):
         # events fold and bucket 2 opens (closing bucket 1)
         [(200_000, 7, 104.0, 1.0, False)],
     ]
-    state = _VpinState()
     fn = make_kyle_processor(allowed_lateness_s=60)
+    state = MockGroupState(fn.state_schema)
     emitted = []
     for b in batches:
         for out in fn(("A",), iter([pd.DataFrame(b, columns=cols)]), state):
@@ -1218,8 +1203,8 @@ def test_stream_kyle_bounded_lateness_reorders_across_batches(spark):
     )
 
     # hard-late under lateness 0: dropped + counted, buckets unpolluted
-    state2 = _VpinState()
     fn2 = make_kyle_processor(allowed_lateness_s=0)
+    state2 = MockGroupState(fn2.state_schema)
     emitted2 = []
     for b in [[tape[0], tape[1]], [(15_000, 9, 500.0, 9.0, False), tape[3]],
               [tape[5]]]:
@@ -1257,8 +1242,8 @@ def test_stream_roll_bounded_lateness_reorders_across_batches(spark):
         [tape[2]],                   # t3, 2s late
         [(60_000, 6, 100.0)],        # flush past the lateness window
     ]
-    state = _VpinState()
     fn = make_roll_processor(allowed_lateness_s=5)
+    state = MockGroupState(fn.state_schema)
     emitted = []
     for b in batches:
         for out in fn(("A",), iter([pd.DataFrame(b, columns=cols)]), state):
