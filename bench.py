@@ -927,17 +927,17 @@ def streaming_main(provider: str = "hdfs") -> None:
         )
 
         dirs, rows_in, schemas = {}, {}, {}
-        for kind, df in (("trades", trades_b), ("merged", merged_b)):
+        for kind, df in (
+            ("trades", trades_b.repartition(STREAM_INPUT_FILES)),
+            ("merged", merged_b.repartition(STREAM_INPUT_FILES)),
+            ("vectors",
+             vectors_b.repartitionByRange(STREAM_INPUT_FILES, "vec_id")),
+        ):
             d = os.path.join(work, kind)
-            df.repartition(STREAM_INPUT_FILES).write.parquet(d)
-            dirs[kind], rows_in[kind] = d, spark.read.parquet(d).count()
-            schemas[kind] = spark.read.parquet(d).schema
-        d = os.path.join(work, "vectors")
-        vectors_b.repartitionByRange(
-            STREAM_INPUT_FILES, "vec_id"
-        ).write.parquet(d)
-        dirs["vectors"], rows_in["vectors"] = d, spark.read.parquet(d).count()
-        schemas["vectors"] = spark.read.parquet(d).schema
+            df.write.parquet(d)
+            written = spark.read.parquet(d)  # one schema inference per input
+            dirs[kind], rows_in[kind] = d, written.count()
+            schemas[kind] = written.schema
 
         # offline quantizer fit for the ingest gate (the "fit then
         # serve" split — training cost is NOT part of the gate's

@@ -38,12 +38,24 @@ local[32]):
   The conf is STATIC (read once, when the JVM first generates code), so
   only :func:`get_spark` can set it; :func:`configure` can only warn
   that a session it did not build runs with a smaller cache.
+- Driver heap held at its start size (``driver_java_options``): the JVM
+  :func:`get_spark` launches starts its heap at ``INITIAL_HEAP_FRACTION``
+  of the driver memory, and G1 grows it only past 20 % GC time.  Left to
+  G1's defaults, the heap starts at 1/64 of the host's RAM and grows in
+  steps sized from recent GC pauses, so the heap a run ends with depends
+  on when its GC bursts fall.  Launch options, so get_spark only.
+- Local streaming checkpoints through the FileSystem API
+  (``LOCAL_CHECKPOINT_MANAGER``): without Hadoop's native library,
+  Spark's default FileContext manager launches a ``readlink`` process on
+  every checkpoint-file rename.  On a local file system a FileSystem
+  rename is an atomic ``rename(2)``; other masters keep Spark's default.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -55,6 +67,20 @@ log = logging.getLogger(__name__)
 # recompiles only 111, whose code embeds values that change per run).
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 4096
+
+# The launched driver's initial heap, as a share of spark.driver.memory:
+# on a 2 GB driver (perfbench), 768 MB, about what G1 grew the heap to by
+# the end of a stream or tabular run when left to grow it.
+INITIAL_HEAP_FRACTION = 3 / 8
+# G1 grows the heap when GC takes more than 1 / (1 + ratio) of the time;
+# its default ratio of 12 (about 8 %) is passed in the GC bursts of a
+# micro-batch, 4 (20 %) only under lasting pressure.
+DRIVER_GC_OPTIONS = "-XX:GCTimeRatio=4"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_MIB = {"": 1, "k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
 
 # Confs that are safe (and necessary) to set on a live session.
 DYNAMIC_CONF: dict[str, str] = {
@@ -119,6 +145,19 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def driver_java_options(memory: str) -> str:
+    """Launch options of the driver JVM for a ``spark.driver.memory`` of
+    ``memory`` (``2g``, ``512m``; a bare number is MiB, as in Spark): the
+    initial heap at ``INITIAL_HEAP_FRACTION`` of it and
+    ``DRIVER_GC_OPTIONS``.  An unreadable size keeps the JVM's initial
+    heap."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?)b?\s*", memory.lower())
+    if m is None:
+        return DRIVER_GC_OPTIONS
+    initial_mb = int(int(m.group(1)) * _MIB[m.group(2)] * INITIAL_HEAP_FRACTION)
+    return f"-Xms{initial_mb}m {DRIVER_GC_OPTIONS}" if initial_mb else DRIVER_GC_OPTIONS
+
+
 def get_spark(
     app_name: str = "bitcoin_datapipeline_spark",
     master: str | None = None,
@@ -131,6 +170,7 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    memory = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -139,13 +179,20 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode = single JVM; give codegen'd aggs room before spill
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", memory)
+        # "default" options: spark-submit puts them before any
+        # spark.driver.extraJavaOptions the caller passes, and keeps both
+        .config("spark.driver.defaultJavaOptions", driver_java_options(memory))
         .config("spark.driver.maxResultSize", "2g")
         # set at build time too: pyspark caches the debugging flag on the
         # FIRST wrapped API call, which can precede the first table() read
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", LOCAL_CHECKPOINT_MANAGER
+        )
     for k, v in DYNAMIC_CONF.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

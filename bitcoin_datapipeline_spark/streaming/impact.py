@@ -1262,6 +1262,11 @@ MARKOUT_STATE_SCHEMA = T.StructType(
 )
 
 
+def _mid(b_u: int, a_u: int) -> float:
+    """Quote mid from exact integer units: the batch double (bid+ask)/2."""
+    return (float(Fraction(b_u, UNITS)) + float(Fraction(a_u, UNITS))) / 2.0
+
+
 def make_markout_processor(allowed_lateness_s: int = 0):
     """Live multi-horizon markouts — the streaming twin of
     operators/aggregates.markout, and the family's only DELAYED-emission
@@ -1333,7 +1338,10 @@ def make_markout_processor(allowed_lateness_s: int = 0):
         f_ts = events[-1][0]  # the frontier merge_fold advanced to
         (q_avail, q_bid, q_ask, t_ts, t_px, t_mk, t_mid0, t_mo,
          seen_key, bk_id, bk_n, bk_s) = body
-        q_hist = list(zip(q_avail, q_bid, q_ask))
+        # each quote carries its mid, converted once when folded (and
+        # once per stored quote on reload) instead of on every lookup
+        q_hist = [(av, b, a, _mid(b, a))
+                  for av, b, a in zip(q_avail, q_bid, q_ask)]
         # rebuild the per-horizon queues: len(mo) routes each trade,
         # and the saved flat order (queue-by-queue, ts-ascending
         # within) keeps every queue ts-sorted on reload
@@ -1364,11 +1372,7 @@ def make_markout_processor(allowed_lateness_s: int = 0):
                     lo = m + 1
                 else:
                     hi = m
-            if lo == 0:
-                return None
-            _, b_u, a_u = q_hist[lo - 1]
-            return (float(Fraction(b_u, UNITS))
-                    + float(Fraction(a_u, UNITS))) / 2.0
+            return q_hist[lo - 1][3] if lo else None
 
         def finalize(upto):
             """Fill every pending horizon whose target < upto; move
@@ -1400,7 +1404,7 @@ def make_markout_processor(allowed_lateness_s: int = 0):
         for s_ts, k2, b_u, a_u, px_u, mk in events:
             finalize(s_ts)
             if k2 < _ISQ_SHIFT:  # quote
-                q_hist.append((s_ts, b_u, a_u))
+                q_hist.append((s_ts, b_u, a_u, _mid(b_u, a_u)))
             else:  # trade
                 ident = f"{s_ts}:{px_u}:{int(mk)}"
                 b_tr = s_ts // 60000
@@ -1433,8 +1437,8 @@ def make_markout_processor(allowed_lateness_s: int = 0):
         if fronts:
             min_target = min(fronts)
             cut = 0
-            for i, (av, _b, _a) in enumerate(q_hist):
-                if av <= min_target:
+            for i, q in enumerate(q_hist):
+                if q[0] <= min_target:
                     cut = i
             q_hist = q_hist[cut:]
         elif q_hist:

@@ -1,5 +1,5 @@
 """Per-session caches: repeated queries recompile no generated code, and
-repeated table reads infer no schema."""
+table reads run no schema-inference job."""
 
 from __future__ import annotations
 
@@ -29,14 +29,18 @@ def test_codegen_cache_holds_a_mix_beyond_the_default(spark):
     assert _compiles(spark) - before == 0
 
 
-def test_second_table_read_runs_no_job(spark, sf_dir):
-    tables.table(spark, sf_dir, "lineitem")
+def test_table_reads_run_no_job(spark, sf_dir):
+    """The first read of each table takes its schema from the parquet
+    footer in-process, later reads from the cache: neither runs a job."""
+    tables._SCHEMAS.clear()
     sc = spark.sparkContext
-    sc.setJobGroup("schema-cache-second-read", "second table() read")
+    sc.setJobGroup("table-reads", "first and second table() reads")
     try:
-        df = tables.table(spark, sf_dir, "lineitem")
-        assert "l_orderkey" in df.columns
-        assert sc.statusTracker().getJobIdsForGroup("schema-cache-second-read") == []
+        for _ in range(2):
+            for name in tables.TABLES:
+                assert tables.table(spark, sf_dir, name).columns
+        assert "l_orderkey" in tables.table(spark, sf_dir, "lineitem").columns
+        assert sc.statusTracker().getJobIdsForGroup("table-reads") == []
     finally:
         sc._jsc.clearJobGroup()
 

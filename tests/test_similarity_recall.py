@@ -188,6 +188,36 @@ def test_quantizer_cache_misses_on_in_place_rewrite(spark, tmp_path):
     S.clear_quantizer_cache()
 
 
+def test_prod_ivf_knob_count_is_memoized(spark, sf_dir, tmp_path):
+    """The production IVF rows size their knobs from the corpus count at
+    construction: a second construction over the same table launches no
+    job, and a rewritten file is counted again."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from bitcoin_datapipeline_spark.operators import similarity as S
+    from bitcoin_datapipeline_spark.tables import table
+
+    d = str(tmp_path)
+    dst = f"{d}/embeddings.parquet"
+    shutil.copyfile(f"{sf_dir}/embeddings.parquet", dst)
+    S.clear_quantizer_cache()
+    S.ann_ivf_prod(table(spark, d, "embeddings"))
+    sc = spark.sparkContext
+    sc.setJobGroup("prod-knobs", "second prod IVF construction")
+    try:
+        S.ann_ivf_prod(table(spark, d, "embeddings"))
+        S.ann_recall_ivf_prod(table(spark, d, "embeddings"))
+        assert sc.statusTracker().getJobIdsForGroup("prod-knobs") == []
+    finally:
+        sc._jsc.clearJobGroup()
+    n = pq.read_metadata(dst).num_rows
+    pq.write_table(pq.read_table(dst).slice(0, n // 2), dst)
+    assert S._corpus_count(table(spark, d, "embeddings")) == n // 2
+    S.clear_quantizer_cache()
+
+
 def test_ivf_query_mod_knob_oracle_parity(spark):
     """query_mod (the production fixed-query-set knob) wired end-to-end:
     query_mod=50 halves the query set and still matches the equally

@@ -187,9 +187,15 @@ def main() -> int:
     results: dict[str, dict] = {}
 
     def record(name, status, dt, rows=None, detail=None):
+        """One query's result; ``sec`` is its whole time, split into the
+        Spark side (construct + collect), the DuckDB side and the
+        canonical compare (each None when that step did not run)."""
         results[name] = {
             "status": status,
             "sec": round(dt, 1),
+            "spark_sec": spark_sec,
+            "duckdb_sec": duckdb_sec,
+            "compare_sec": compare_sec,
             "rows": rows,
             "detail": detail,
         }
@@ -197,6 +203,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        spark_sec = duckdb_sec = compare_sec = None
         t0 = time.time()
         try:
             frame = fn(spark, args.sf)
@@ -217,6 +224,8 @@ def main() -> int:
             record(name, "fail", time.time() - t0, detail="spark raised")
             n_fail += 1
             continue
+        t_spark = time.time()
+        spark_sec = round(t_spark - t0, 2)
         if name not in oracles:
             dt = time.time() - t0
             print(f"rows-only {name}: {len(sdf)} rows ({dt:.1f}s)")
@@ -230,6 +239,8 @@ def main() -> int:
             record(name, "fail", time.time() - t0, detail="duckdb raised")
             n_fail += 1
             continue
+        t_duck = time.time()
+        duckdb_sec = round(t_duck - t_spark, 2)
 
         # vectorized canonical compare when both frames allow it (the
         # reference per-cell path remains for list/Decimal columns and is
@@ -240,6 +251,7 @@ def main() -> int:
         else:
             sn, scols, srows = normalize_frame(sdf)
             dn, dcols, drows = normalize_frame(ddf)
+        compare_sec = round(time.time() - t_duck, 2)
         dt = time.time() - t0
         if sn != dn:
             print(f"FAIL {name}: rows spark={sn} duck={dn} ({dt:.1f}s)")
